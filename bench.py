@@ -65,7 +65,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from hadoop_invertedindexer_spark.caching import release_persisted  # noqa: E402
-from hadoop_invertedindexer_spark.session import get_spark  # noqa: E402
+from hadoop_invertedindexer_spark.session import env_cpus, get_spark  # noqa: E402
 
 # The queries that define the engine's throughput story: the flagship
 # index pipeline, the shuffle-heavy relational queries, windows, and the
@@ -507,7 +507,7 @@ def main() -> None:
     out_path = (
         CHECK_PATH if do_check else QUERIES_PATH if do_update else CAPTURE_PATH
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = env_cpus()
     write_queries_file(
         total,
         sf,

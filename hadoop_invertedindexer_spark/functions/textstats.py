@@ -195,6 +195,7 @@ def repetition_signals(
     would otherwise each re-scan and re-normalize the corpus."""
     from hadoop_invertedindexer_spark.caching import tracked_persist
     from hadoop_invertedindexer_spark.operators.dedup import (
+        _token_ngrams,
         normalized_text,
         token_array,
     )
@@ -205,18 +206,6 @@ def repetition_signals(
         F.length(normalized_text(text_col)).alias("_nchars"),
         token_array(text_col).alias("_tk"),
     ).transform(tracked_persist)
-
-    def toks_grams(n: int):
-        # word_ngrams over the CACHED token array (identical semantics:
-        # short docs yield the single whole-text gram)
-        return F.when(
-            F.size("_tk") < n, F.array(F.concat_ws(" ", F.col("_tk")))
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size("_tk") - n),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_tk"), i + 1, n)),
-            )
-        )
 
     lines = (
         d.select(
@@ -258,7 +247,7 @@ def repetition_signals(
             d.select(
                 id_col,
                 "_nchars",
-                F.explode_outer(toks_grams(n)).alias("g"),
+                F.explode_outer(_token_ngrams(F.col("_tk"), n)).alias("g"),
             )
             .where(F.col("g") != "")
             .groupBy(id_col, "_nchars", "g")

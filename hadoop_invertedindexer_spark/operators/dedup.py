@@ -60,14 +60,35 @@ def token_array(col="text"):
     return F.split(normalized_text(col), " ")
 
 
-def word_ngrams(col="text", n: int = 3):
-    """Array of word n-gram shingles (space-joined, order-preserving)."""
-    toks = token_array(col)
-    return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
+def _token_ngrams(tokens, n: int, n_tokens=None):
+    """Word n-grams of a token-array column: every run of ``n``
+    consecutive tokens, space-joined, in order; fewer than ``n`` tokens
+    yield the whole space-joined array as one gram. ``n_tokens`` is an
+    already-computed ``size(tokens)`` column, when the caller has one.
+    ``tokens`` must be a column reference or lambda variable: it is
+    evaluated once per gram."""
+    if n_tokens is None:
+        n_tokens = F.size(tokens)
+    return F.when(n_tokens < n, F.array(F.concat_ws(" ", tokens))).otherwise(
         F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+            F.sequence(F.lit(0), n_tokens - n),
+            lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
         )
+    )
+
+
+def word_ngrams(col="text", n: int = 3):
+    """Array of word n-gram shingles (space-joined, order-preserving).
+
+    The token array is bound to a lambda variable (a one-element
+    ``transform``) so it is computed once per row. Higher-order
+    functions are interpreted and Catalyst does not pull a common
+    subexpression out of a lambda body: ``token_array`` referenced
+    inside the per-gram lambda would re-run the whole lowercase,
+    punctuation, whitespace and split chain once per shingle, O(tokens²)
+    per doc."""
+    return F.element_at(
+        F.transform(F.array(token_array(col)), lambda t: _token_ngrams(t, n)), 1
     )
 
 
@@ -1070,6 +1091,12 @@ def ngram_jaccard_pairs(
     ``max_df`` drops shingles occurring in more than that many docs
     (stop-shingles) — the fanout bound that keeps the self-join linear-ish
     at scale; dropped shingles can only lower recall, never precision.
+
+    Precondition: one input row per ``id_col`` value. Shingles are
+    de-duplicated per row, not per id, so an id on several rows counts
+    a shingle it repeats across them more than once, in ``|A|`` and in
+    ``|A∩B|``, and its scores are wrong. Not checked here: the check
+    would cost a shuffle of the doc stream.
     """
     inter, sizes = _shingle_intersections(docs, n, max_df, id_col, text_col)
     # per-doc size frames are unbounded too (one row per document) —
@@ -1120,7 +1147,10 @@ def containment_pairs(
     silent saturation (every shared shingle capped, 0 output pairs)
     becomes a bounded, caller-priced recall retry, with the last tier
     still the hard fanout bound. :func:`shingle_cap_report` is the
-    observability twin that says whether the cap is biting."""
+    observability twin that says whether the cap is biting.
+
+    Precondition: one input row per ``id_col`` value, as for
+    :func:`ngram_jaccard_pairs` (shingles are de-duplicated per row)."""
     inter, sizes = _shingle_intersections(
         docs, n, max_df, id_col, text_col, max_df_tiers, max_dropped_mils
     )
@@ -2532,25 +2562,7 @@ def dedup_substrings(
         .withColumn("t_len", F.size("tk"))
         .transform(tracked_persist)  # feeds the window emit AND the rebuild
     )
-    wins = toks.select(
-        "id",
-        "t_len",
-        F.posexplode_outer(
-            F.when(
-                F.col("t_len") < n, F.array(F.concat_ws(" ", F.col("tk")))
-            ).otherwise(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("t_len") - n),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("tk"), i + 1, n)),
-                )
-            )
-        ).alias("pos", "sh_str"),
-    ).select(
-        "id",
-        "pos",
-        F.least(F.col("pos") + n - 1, F.col("t_len") - 1).alias("e"),
-        F.xxhash64("sh_str").alias("sh"),
-    )
+    wins = _token_windows(toks, n)
     dup = (
         wins.groupBy("sh")
         .agg(
@@ -2641,37 +2653,13 @@ def decontaminate_substrings(
         .transform(tracked_persist)  # window emit + rebuild
     )
 
-    def windows(frame):
-        return frame.select(
-            "id",
-            "t_len",
-            F.posexplode_outer(
-                F.when(
-                    F.col("t_len") < n,
-                    F.array(F.concat_ws(" ", F.col("tk"))),
-                ).otherwise(
-                    F.transform(
-                        F.sequence(F.lit(0), F.col("t_len") - n),
-                        lambda i: F.concat_ws(
-                            " ", F.slice(F.col("tk"), i + 1, n)
-                        ),
-                    )
-                )
-            ).alias("pos", "sh_str"),
-        ).select(
-            "id",
-            "pos",
-            F.least(F.col("pos") + n - 1, F.col("t_len") - 1).alias("e"),
-            F.xxhash64("sh_str").alias("sh"),
-        )
-
     eval_windows = (
         _window_hashes(evalset, n, id_col, text_col).select("sh").distinct()
     )
     # matched train windows: semi join keeps each window at most once,
     # shuffle_hash because contamination volume is unbounded (a train
     # corpus that embeds the whole benchmark matches everywhere)
-    hits = windows(toks).join(
+    hits = _token_windows(toks, n).join(
         eval_windows.hint("shuffle_hash"), "sh", "left_semi"
     )
     w = Window.partitionBy("id").orderBy("pos")
@@ -2716,35 +2704,29 @@ def _window_hashes(docs: DataFrame, n: int, id_col: str, text_col: str):
     tokenize+window explode runs at full width."""
     from hadoop_invertedindexer_spark.sources.tables import spread_if_narrow
 
-    return (
-        spread_if_narrow(docs, id_col).select(
-            F.col(id_col).alias("id"),
-            token_array(text_col).alias("tk"),
-        )
+    toks = (
+        spread_if_narrow(docs, id_col)
+        .select(F.col(id_col).alias("id"), token_array(text_col).alias("tk"))
         .withColumn("t_len", F.size("tk"))
-        .select(
-            "id",
-            "t_len",
-            F.posexplode_outer(
-                F.when(
-                    F.col("t_len") < n,
-                    F.array(F.concat_ws(" ", F.col("tk"))),
-                ).otherwise(
-                    F.transform(
-                        F.sequence(F.lit(0), F.col("t_len") - n),
-                        lambda i: F.concat_ws(
-                            " ", F.slice(F.col("tk"), i + 1, n)
-                        ),
-                    )
-                )
-            ).alias("pos", "sh_str"),
-        )
-        .select(
-            "id",
-            "pos",
-            F.least(F.col("pos") + n - 1, F.col("t_len") - 1).alias("e"),
-            F.xxhash64("sh_str").alias("sh"),
-        )
+    )
+    return _token_windows(toks, n)
+
+
+def _token_windows(toks: DataFrame, n: int) -> DataFrame:
+    """(id, pos, e, sh) from an (id, tk, t_len) token frame: each
+    length-``n`` window of ``tk`` (the whole doc when shorter) at its
+    start ``pos``, ending at token ``e``, keyed by its ``xxhash64``."""
+    return toks.select(
+        "id",
+        "t_len",
+        F.posexplode_outer(
+            _token_ngrams(F.col("tk"), n, F.col("t_len"))
+        ).alias("pos", "sh_str"),
+    ).select(
+        "id",
+        "pos",
+        F.least(F.col("pos") + n - 1, F.col("t_len") - 1).alias("e"),
+        F.xxhash64("sh_str").alias("sh"),
     )
 
 
@@ -2850,25 +2832,9 @@ def decontaminate_substrings_incremental(
     )
     # windows come straight off the persisted token projection
     # (_window_hashes would re-tokenize the raw text per scan)
-    hits = toks.select(
-        "id",
-        "t_len",
-        F.posexplode_outer(
-            F.when(
-                F.col("t_len") < n, F.array(F.concat_ws(" ", F.col("tk")))
-            ).otherwise(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("t_len") - n),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("tk"), i + 1, n)),
-                )
-            )
-        ).alias("pos", "sh_str"),
-    ).select(
-        "id",
-        "pos",
-        F.least(F.col("pos") + n - 1, F.col("t_len") - 1).alias("e"),
-        F.xxhash64("sh_str").alias("sh"),
-    ).join(idx.hint("shuffle_hash"), "sh", "left_semi")
+    hits = _token_windows(toks, n).join(
+        idx.hint("shuffle_hash"), "sh", "left_semi"
+    )
     w = Window.partitionBy("id").orderBy("pos")
     wprev = w.rowsBetween(Window.unboundedPreceding, -1)
     spans = (

@@ -42,6 +42,13 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def env_cpus() -> int:
+    """Local core count from ``$SPARK_GRAFT_CPUS``; unset or blank (an
+    exported but empty variable) means 32."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    return int(raw) if raw else 32
+
+
 def get_spark(
     app_name: str = "hadoop-invertedindexer-spark",
     master: str | None = None,
@@ -55,7 +62,7 @@ def get_spark(
     cluster you would size this to total executor cores (or let AQE's
     coalescing own it).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = env_cpus()
     master = master or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)

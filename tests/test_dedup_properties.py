@@ -540,3 +540,46 @@ def test_pairs_topk_bounded_matches_python_model(spark, raw, k):
         ret[b] = ret.get(b, 0) + 1
     for i, d in deg.items():
         assert ret.get(i, 0) >= min(k, d)
+
+
+def _model_word_ngrams(text: str, n: int) -> list[str]:
+    """word_ngrams restated in Python: lowercase, punctuation class →
+    space, whitespace runs → one space, trim, split on " "; fewer than
+    ``n`` tokens give the whole normalized text as one gram."""
+    import re
+
+    from hadoop_invertedindexer_spark.functions.textprep import PUNCT_CHAR_CLASS
+
+    norm = re.sub(PUNCT_CHAR_CLASS, " ", text.lower())
+    # Java's \s: ASCII whitespace only
+    norm = re.sub("[ \t\n\x0b\f\r]+", " ", norm).strip(" ")
+    toks = norm.split(" ")
+    if len(toks) < n:
+        return [norm]
+    return [" ".join(toks[p : p + n]) for p in range(len(toks) - n + 1)]
+
+
+ngram_text = st.text(alphabet=st.sampled_from("aBcDe XyZ,.!?-'\t\n\r"), max_size=40)
+
+
+@HSETTINGS
+@given(texts=st.lists(ngram_text, min_size=1, max_size=6))
+def test_word_ngrams_matches_python_model(spark, texts):
+    """Mixed case, punctuation, tab/newline and space runs, blank edges,
+    empty and whitespace-only texts, and texts shorter than ``n`` all
+    match the model; a NULL text yields NULL."""
+    ns = (1, 2, 3, 8)
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)] + [(-1, None)],
+        "doc_id int, text string",
+    )
+    got = {
+        r.doc_id: r[1:]
+        for r in docs.select(
+            "doc_id", *(dedup.word_ngrams("text", n) for n in ns)
+        ).collect()
+    }
+    assert got.pop(-1) == (None,) * len(ns)
+    assert got == {
+        i: tuple(_model_word_ngrams(t, n) for n in ns) for i, t in enumerate(texts)
+    }

@@ -989,3 +989,19 @@ def test_hybrid_rrf_fusion_is_metadata_scale(spark):
     plan = _plan(qs["hybrid_search_rrf"](spark, SF))
     assert "SortMergeJoin" not in plan
     assert "Union" in plan
+
+
+def test_word_ngrams_tokenizes_once_per_row(spark):
+    """The token array is bound to a lambda variable, so the normalize
+    chain appears once in the plan; referenced inside the per-gram
+    lambda it would run once per shingle and twice more for the size
+    checks."""
+    from hadoop_invertedindexer_spark.operators import dedup
+
+    d = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+
+    def lowers(df) -> int:
+        return df._jdf.queryExecution().optimizedPlan().toString().count("lower(")
+
+    assert lowers(d.select(dedup.word_ngrams("text", 3).alias("g"))) == 1
+    assert lowers(dedup.minhash_signatures(d)) == 1
